@@ -2014,3 +2014,113 @@ def test_show_create_table_lakehouse(spark, tmp_path):
     ddl = eng.sql(f"SHOW CREATE TABLE hudi.'{h}'").collect()[0][0]
     assert "hoodie.table.type = 'MERGE_ON_READ'" in ddl
     assert "hoodie.table.recordkey.fields = 'id'" in ddl
+
+
+
+def test_local_frame_matches_create_dataframe(spark):
+    """frames.local_frame: same names, types, nullability and rows as
+    ``createDataFrame(rows, ddl)``, for empty input and NULL cells too,
+    planned as a LocalTableScan. Cells that a SQL VALUES literal would
+    mangle (quotes, backslashes, NaN) arrive intact."""
+    import datetime
+    import decimal
+    import math
+
+    from witdb_spark.frames import NO_COLUMNS, local_frame
+
+    ddl = (
+        "s string, i int, b bigint, d double, f boolean,"
+        " m decimal(12,2), dt date, `Odd Name` string"
+    )
+    rows = [
+        ("a'b\\c", 1, 2**40, 0.5, True, decimal.Decimal("1.25"),
+         datetime.date(1995, 3, 1), ""),
+        (None, None, None, None, None, None, None, None),
+    ]
+    for data in (rows, []):
+        got = local_frame(spark, data, ddl)
+        want = spark.createDataFrame(data, ddl)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert plan.startswith("LocalTableScan"), plan
+    (nan,) = local_frame(spark, [(float("nan"),)], "d double").collect()
+    assert math.isnan(nan.d)
+    assert local_frame(spark, rows, ddl).collect()[0].s == "a'b\\c"
+    empty = local_frame(spark, [], NO_COLUMNS)
+    assert empty.schema == spark.range(0).select().schema
+    assert empty.collect() == []
+    with pytest.raises(ValueError, match="cells"):
+        local_frame(spark, [("only one",)], "a string, b string")
+
+def test_statement_results_start_no_job(spark, tmp_path):
+    """Every driver-built statement result — the DML/CTAS/INSERT
+    summaries on Delta and Iceberg, DESCRIBE/SHOW and a $-metadata
+    table — is a LocalTableScan: collecting it adds no Spark job, and
+    its schema and rows equal what ``createDataFrame(rows, ddl)`` (the
+    builder it replaces) returns for the same rows."""
+    import os
+
+    sf0001 = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+    eng = Engine(spark, sf_dir=sf0001)
+    tracker = spark.sparkContext.statusTracker()
+    spark.createDataFrame(
+        [(1, "1-URGENT"), (7, "9-NEW")], "k bigint, prio string"
+    ).createOrReplaceTempView("zj_src")
+
+    def check(text, ddl, rows=None):
+        df = eng.sql(text)  # the statement itself runs here
+        before = set(tracker.getJobIdsForGroup())
+        got = df.collect()
+        assert set(tracker.getJobIdsForGroup()) == before, text
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.startswith("LocalTableScan"), (text, plan)
+        want = spark.createDataFrame(
+            [tuple(r) for r in got] if rows is None else rows, ddl
+        )
+        assert df.schema == want.schema, text
+        assert got == want.collect(), text
+        return got
+
+    keys = {
+        r[0] for r in eng.sql(
+            "SELECT o_orderkey FROM orders WHERE o_orderkey < 40"
+        ).collect()
+    }
+    summary = "path string, result string"
+    for fmt in ("delta", "iceberg"):
+        t = str(tmp_path / f"zj_{fmt}")
+        ref = f"{fmt}.'{t}'"
+        check(
+            f"CREATE TABLE {ref} AS SELECT o_orderkey AS k,"
+            " o_orderpriority AS prio FROM orders WHERE o_orderkey < 40",
+            "path string, rows bigint", [(t, len(keys))],
+        )
+        check(
+            f"INSERT INTO {ref} SELECT k + 1000, prio FROM zj_src",
+            "path string, rows bigint", [(t, 2)],
+        )
+        for text in (
+            f"UPDATE {ref} SET prio = 'X' WHERE k = 1",
+            f"DELETE FROM {ref} WHERE k > 1000",
+            f"MERGE INTO {ref} t USING zj_src s ON t.k = s.k"
+            " WHEN MATCHED THEN UPDATE SET prio = s.prio"
+            " WHEN NOT MATCHED THEN INSERT (k, prio) VALUES (s.k, s.prio)",
+        ):
+            (row,) = check(text, summary)
+            assert row.path == t, text
+        got = {r.k for r in eng.sql(f"SELECT k FROM {ref}").collect()}
+        assert got == keys | {7}, fmt
+    check(
+        "DESCRIBE orders",
+        "Column string, Type string, Extra string, Comment string",
+        [
+            (f.name, f.dataType.simpleString(), "", "")
+            for f in spark.table("orders").schema.fields
+        ],
+    )
+    assert ("orders",) in check("SHOW TABLES", "Table string")
+    check(
+        f"SELECT * FROM iceberg.'{tmp_path / 'zj_iceberg'}$properties'",
+        "key string, value string",
+    )

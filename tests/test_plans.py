@@ -430,9 +430,9 @@ def test_spatial_contains_broadcasts_polygon_side(spark):
 
     m = _re.search(r"BroadcastHashJoin.*?Build(Left|Right)", plan, _re.S)
     assert m is not None
-    # the broadcast subtree must be the polygon side — since r10 a
-    # VALUES LocalRelation (local_df; createDataFrame would schedule
-    # 32 python-worker tasks per action) — and the points parquet scan
+    # the broadcast subtree must be the polygon side — a driver-local
+    # LocalRelation (frames.local_frame; a parallelized python list would
+    # schedule 32 python-worker tasks per action) — and the points parquet scan
     # must stay on the streamed side, never under an exchange
     bcast = plan.split("BroadcastExchange", 1)[1]
     assert "LocalTableScan" in bcast[:3000]

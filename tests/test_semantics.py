@@ -496,6 +496,128 @@ def test_cte_selfjoin_narrowing(oracle):
     assert rewrite_cte_selfjoin_narrow(bad2, force=True) == bad2
 
 
+
+def test_cte_narrowing_bails_on_star_consumer(oracle):
+    """A select-list `*` or `alias.*` over the narrowed CTE would expand
+    to the narrowed column set (dropped attributes gone, hidden
+    __ea_a{i} anchors added), so the rewrite must not fire. count(*)
+    and multiplication in the consumer are not star items: the rewrite
+    still fires there, value-identical vs DuckDB."""
+    from witdb_spark.plans.eager_agg import rewrite_cte_selfjoin_narrow
+    from witdb_spark.queries import QUERIES
+
+    text = QUERIES["tpcds_sql_q64"].oracle
+    head = "SELECT cs1.product_name, cs1.store_name,"
+    assert text.count(head) == 1
+    for star in ("SELECT cs1.*, cs1.product_name, cs1.store_name,",
+                 "SELECT *, cs1.product_name, cs1.store_name,",
+                 "SELECT DISTINCT *, cs1.product_name, cs1.store_name,"):
+        starred = text.replace(head, star)
+        assert rewrite_cte_selfjoin_narrow(starred, force=True) == starred
+    # an alias.* inside a string literal is no star item
+    lit = text.replace(head, "SELECT 'cs1.*' AS tag, " + head[len("SELECT "):])
+    assert "__ea_pre" in rewrite_cte_selfjoin_narrow(lit, force=True)
+    prod = text.replace(
+        "cs1.cnt AS cnt1,",
+        "cs1.cnt * 2 AS cnt1, (SELECT count(*) FROM region) AS nreg,",
+    )
+    r = rewrite_cte_selfjoin_narrow(prod, force=True)
+    assert "__ea_pre" in r
+    a = oracle.execute(prod).fetchdf()
+    b = oracle.execute(r).fetchdf()
+    assert list(a.columns) == list(b.columns)
+    import pandas as pd
+
+    pd.testing.assert_frame_equal(
+        a.sort_values(by=list(a.columns), kind="mergesort").reset_index(drop=True),
+        b.sort_values(by=list(a.columns), kind="mergesort").reset_index(drop=True),
+    )
+
+
+def test_year_month_collapse_respects_not():
+    """The year+month collapse replaces ``year(c) = Y AND month(c) = M``
+    as a unit, so it may fire only where the text parses as that one
+    conjunction. ``NOT year(c) = Y AND month(c) = M`` is
+    ``(NOT year(c) = Y) AND month(c) = M``: collapsing it negated the
+    whole March-1995 range (14,814 rows instead of 1,178 on sf0.01
+    orders). Differential: original vs rewritten text in DuckDB."""
+    import os
+
+    import duckdb
+
+    from tests.conftest import SF_DIR
+    from witdb_spark.plans.dialect import _rewrite_year_month_ranges
+
+    orders = os.path.join(os.path.dirname(SF_DIR), "sf0.01", "orders.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM '{orders}'")
+
+    def rows(sql):
+        sql = sql.replace("TIMESTAMP_NTZ '", "TIMESTAMP '")
+        return sorted(con.execute(sql).fetchall())
+
+    ym = "year(o_orderdate) = 1995 AND month(o_orderdate) = 3"
+    cases = {
+        f"NOT {ym}": False,
+        "1 + year(o_orderdate) = 1996 AND month(o_orderdate) = 3": False,
+        f"year(o_orderdate) = 1995 AND month(o_orderdate) = 3 * 4": False,
+        ym: True,
+        f"NOT ({ym})": True,
+        f"o_orderkey < 100 OR {ym}": True,
+        f"o_orderkey > 100 AND {ym} AND o_custkey > 0": True,
+    }
+    for pred, fires in cases.items():
+        text = f"SELECT o_orderkey FROM orders WHERE {pred}"
+        out = _rewrite_year_month_ranges(text)
+        assert (out != text) == fires, pred
+        assert rows(out) == rows(text), pred
+    not_text = f"SELECT o_orderkey FROM orders WHERE NOT {ym}"
+    assert len(rows(not_text)) == 1178
+    con.close()
+
+
+def test_decimal_typed_cols_deep_chain():
+    """The greatest fixpoint over ``AS name`` definitions converges for
+    any chain depth: a non-decimal root (a physical double column)
+    reaches the END of a 9-deep CTE chain. A fixed 6-pass cap stopped
+    early and still called c6..c8 decimal."""
+    from witdb_spark.plans.dialect import _decimal_typed_cols
+
+    depth = 9
+    ctes = ["t0 AS (SELECT l_quantity AS c0 FROM lineitem)"] + [
+        f"t{i} AS (SELECT c{i - 1} AS c{i} FROM t{i - 1})"
+        for i in range(1, depth)
+    ]
+    text = f"WITH {', '.join(ctes)} SELECT SUM(c{depth - 1}) AS s FROM t{depth - 1}"
+    assert _decimal_typed_cols(text) == frozenset()
+    # the same chain rooted in a decimal CAST is decimal all the way
+    dec_root = text.replace(
+        "l_quantity AS c0", "CAST(l_quantity AS DECIMAL(18,6)) AS c0"
+    )
+    assert {f"c{i}" for i in range(depth)} <= _decimal_typed_cols(dec_root)
+
+
+def test_footer_schema_matches_inference(spark):
+    """catalog.Tables reads each fixture with the schema its parquet
+    footer declares (no schema-inference job); that schema must equal
+    what ``spark.read.parquet`` infers, for every table in every
+    fixture directory."""
+    import os
+
+    from tests.conftest import SF_DIR
+    from witdb_spark.catalog import TABLE_NAMES, Tables, footer_schema
+
+    dirs = [
+        os.path.join(os.path.dirname(SF_DIR), f"sf{sf}")
+        for sf in ("0.001", "0.01", "0.1")
+    ]
+    # events' nanos column maps through the session conf _read_events sets
+    Tables(spark, dirs[0]).events
+    for d in dirs:
+        for t in TABLE_NAMES:
+            p = os.path.join(d, f"{t}.parquet")
+            assert footer_schema(spark, p) == spark.read.parquet(p).schema, p
+
 def test_sum_narrowing_skips_window_calls():
     """A windowed SUM cannot carry the type-restoring CAST wrap (OVER
     must attach to the aggregate call) — the narrowing must leave

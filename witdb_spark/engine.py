@@ -21,6 +21,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from witdb_spark.catalog import Tables
+from witdb_spark.frames import NO_COLUMNS, local_frame
 from witdb_spark.functions import register_all
 from witdb_spark.plans import transpile
 
@@ -123,7 +124,7 @@ class Engine:
         m = _DROP_VIEW.match(text)
         if m:
             self.drop_view(m.group("name"), if_exists=bool(m.group("if_exists")))
-            return self.spark.range(0).select()
+            return local_frame(self.spark, [], NO_COLUMNS)
         m = _SHOW_COLUMNS.match(text)
         if m:
             return self.show_columns(m.group("name"))
@@ -249,8 +250,8 @@ class Engine:
                     self.spark, m.group("path"),
                     [e for e in joined if e],
                 )
-                return self.spark.createDataFrame(
-                    [(spec_id,)], "spec_id int"
+                return local_frame(
+                    self.spark, [(spec_id,)], "spec_id int"
                 )
             # plain property: 'string' | true/false | number
             raw = m.group("val").strip().rstrip(";").strip()
@@ -301,8 +302,8 @@ class Engine:
                     " supported jar-free (the reference's hudi"
                     " connector is read-only)"
                 )
-            return self.spark.createDataFrame(
-                [(key, "" if val is None else val)],
+            return local_frame(
+                self.spark, [(key, "" if val is None else val)],
                 "key string, value string",
             )
         m = re.match(
@@ -330,8 +331,8 @@ class Engine:
                         f"{path} is not a {fmt} table"
                     )
                 shutil.rmtree(path)
-                return self.spark.createDataFrame(
-                    [(path, "dropped")], "path string, result string"
+                return local_frame(
+                    self.spark, [(path, "dropped")], "path string, result string"
                 )
             if fmt == "delta":
                 from witdb_spark.sources.delta_log import delta_truncate
@@ -347,8 +348,8 @@ class Engine:
                 from witdb_spark.sources.hudi_meta import hudi_truncate
 
                 res = str(hudi_truncate(self.spark, path))
-            return self.spark.createDataFrame(
-                [(path, res)], "path string, result string"
+            return local_frame(
+                self.spark, [(path, res)], "path string, result string"
             )
         m = re.match(
             r"^\s*CREATE\s+TABLE\s+(?P<fmt>delta|iceberg|hudi)\s*\.\s*"
@@ -446,8 +447,8 @@ class Engine:
                     )
             finally:
                 df.unpersist()
-            return self.spark.createDataFrame(
-                [(path, n)], "path string, rows bigint"
+            return local_frame(
+                self.spark, [(path, n)], "path string, rows bigint"
             )
         dml = self._sql_lakehouse_dml(text)
         if dml is not None:
@@ -463,7 +464,7 @@ class Engine:
             if len(val) >= 2 and val[0] == val[-1] == "'":
                 val = val[1:-1].replace("''", "'")
             self.set_session(m.group(1), val)
-            return self.spark.range(0).select()
+            return local_frame(self.spark, [], NO_COLUMNS)
         m = re.match(
             r"^\s*RESET\s+SESSION\s+([A-Za-z_][A-Za-z0-9_.]*)\s*;?\s*$",
             text, re.I,
@@ -472,7 +473,7 @@ class Engine:
             self.spark.conf.unset(
                 SESSION_PROPERTIES.get(m.group(1), m.group(1))
             )
-            return self.spark.range(0).select()
+            return local_frame(self.spark, [], NO_COLUMNS)
         if re.match(r"^\s*SHOW\s+SESSION\s*;?\s*$", text, re.I):
             # reference ShowSessionTask: Name | Value | Default layout
             # over the mapped property table
@@ -483,8 +484,8 @@ class Engine:
                 except Exception:
                     val = None
                 rows.append((name, val if val is not None else "", conf))
-            return self.spark.createDataFrame(
-                rows, "Name string, Value string, `Spark Conf` string"
+            return local_frame(
+                self.spark, rows, "Name string, Value string, `Spark Conf` string"
             )
         m = re.match(
             r"^\s*EXPLAIN\s*\(\s*(.*?)\s*\)\s*(.+)$", text, re.I | re.S
@@ -506,16 +507,16 @@ class Engine:
                 # EXPLAIN must NEVER execute DML (only EXPLAIN ANALYZE
                 # runs its statement, per the reference's semantics)
                 if etype == "VALIDATE":
-                    return self.spark.createDataFrame(
-                        [(True,)], "Valid boolean"
+                    return local_frame(
+                        self.spark, [(True,)], "Valid boolean"
                     )
-                return self.spark.createDataFrame(
-                    [(dml_desc,)], "`Query Plan` string"
+                return local_frame(
+                    self.spark, [(dml_desc,)], "`Query Plan` string"
                 )
             if etype == "VALIDATE":
                 self.sql(m.group(2))  # analysis errors propagate
-                return self.spark.createDataFrame(
-                    [(True,)], "Valid boolean"
+                return local_frame(
+                    self.spark, [(True,)], "Valid boolean"
                 )
             if etype == "IO":
                 # the scanned-relations surface of the plan (reference
@@ -528,22 +529,22 @@ class Engine:
                     ln.strip() for ln in plan.splitlines()
                     if "Scan" in ln or "Relation" in ln
                 ) or plan
-                return self.spark.createDataFrame(
-                    [(scans,)], "`Query Plan` string"
+                return local_frame(
+                    self.spark, [(scans,)], "`Query Plan` string"
                 )
             mode = "extended" if etype == "LOGICAL" else "formatted"
             df = self.sql(m.group(2))
             plan = df._jdf.queryExecution().explainString(
                 self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
             )
-            return self.spark.createDataFrame(
-                [(plan,)], "`Query Plan` string"
+            return local_frame(
+                self.spark, [(plan,)], "`Query Plan` string"
             )
         m = re.match(r"^\s*EXPLAIN\s+(ANALYZE\s+)?(.+)$", text, re.I | re.S)
         if m and not re.match(r"^\s*EXPLAIN\s+ANALYZE\s*$", text, re.I):
             plan = self.explain(m.group(2), analyze=bool(m.group(1)))
-            return self.spark.createDataFrame(
-                [(plan,)], "`Query Plan` string"
+            return local_frame(
+                self.spark, [(plan,)], "`Query Plan` string"
             )
         m = re.match(
             r"^\s*DESCRIBE\s+([A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$", text, re.I
@@ -551,8 +552,8 @@ class Engine:
         if m:  # Trino DESCRIBE == SHOW COLUMNS (DescribeTask delegates)
             return self.show_columns(m.group(1))
         if re.match(r"^\s*SHOW\s+TABLES\s*;?\s*$", text, re.I):
-            return self.spark.createDataFrame(
-                [(t,) for t in self.tables()], "Table string"
+            return local_frame(
+                self.spark, [(t,) for t in self.tables()], "Table string"
             )
         if re.match(r"^\s*SHOW\s+FUNCTIONS\s*;?\s*$", text, re.I):
             # reference ShowFunctionsRewrite: the Trino-name surface =
@@ -571,8 +572,8 @@ class Engine:
                 "date_diff", "date_format", "bit_count",
             }
             names = sorted(set(PASSTHROUGH) | set(MACROS) | temp | dialect_names)
-            return self.spark.createDataFrame(
-                [(n,) for n in names], "Function string"
+            return local_frame(
+                self.spark, [(n,) for n in names], "Function string"
             )
         m = re.match(
             r"^\s*SHOW\s+CREATE\s+VIEW\s+([A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$",
@@ -583,7 +584,7 @@ class Engine:
             if name not in self._views:
                 raise KeyError(f"View not found: {name!r}")
             ddl = f"CREATE VIEW {name} AS\n{self._views[name]}"
-            return self.spark.createDataFrame([(ddl,)], "`Create View` string")
+            return local_frame(self.spark, [(ddl,)], "`Create View` string")
         m = re.match(
             r"^\s*SHOW\s+CREATE\s+TABLE\s+([A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$",
             text, re.I,
@@ -595,13 +596,13 @@ class Engine:
                 for f in self.spark.table(name).schema.fields
             )
             ddl = f"CREATE TABLE {name} (\n   {cols}\n)"
-            return self.spark.createDataFrame([(ddl,)], "`Create Table` string")
+            return local_frame(self.spark, [(ddl,)], "`Create Table` string")
         if re.match(r"^\s*SHOW\s+CATALOGS\s*;?\s*$", text, re.I):
             rows = [(c.name,) for c in self.spark.catalog.listCatalogs()]
-            return self.spark.createDataFrame(rows, "Catalog string")
+            return local_frame(self.spark, rows, "Catalog string")
         if re.match(r"^\s*SHOW\s+SCHEMAS\s*;?\s*$", text, re.I):
             rows = [(d.name,) for d in self.spark.catalog.listDatabases()]
-            return self.spark.createDataFrame(rows, "Schema string")
+            return local_frame(self.spark, rows, "Schema string")
         m = re.match(
             r"^\s*DESCRIBE\s+(INPUT|OUTPUT)\s+([A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$",
             text, re.I,
@@ -619,11 +620,10 @@ class Engine:
                     for chunk in re.split(r"('(?:[^']|'')*')", prepared[name])
                     if not chunk.startswith("'")
                 )
-                rows = [(i, "unknown") for i in range(n)]
-                return self.spark.createDataFrame(
-                    rows, "Position int, Type string"
-                ) if rows else self.spark.createDataFrame(
-                    [], "Position int, Type string"
+                return local_frame(
+                    self.spark,
+                    [(i, "unknown") for i in range(n)],
+                    "Position int, Type string",
                 )
             # OUTPUT: bind NULLs to parameters and describe the result schema
             stub = prepared[name]
@@ -638,13 +638,13 @@ class Engine:
                 out.append(chunk)
             schema = self.sql("".join(out)).schema
             rows = [(f.name, f.dataType.simpleString()) for f in schema.fields]
-            return self.spark.createDataFrame(rows, "`Column Name` string, Type string")
+            return local_frame(self.spark, rows, "`Column Name` string, Type string")
         if re.match(r"^\s*SHOW\s+SESSION\s*;?\s*$", text, re.I):
             rows = [
                 (prop, self.spark.conf.get(conf, None) or "")
                 for prop, conf in SESSION_PROPERTIES.items()
             ]
-            return self.spark.createDataFrame(rows, "Name string, Value string")
+            return local_frame(self.spark, rows, "Name string, Value string")
         m = _CREATE_MV.match(text)
         if m:
             return self.create_materialized_view(
@@ -658,7 +658,7 @@ class Engine:
             self.drop_materialized_view(
                 m.group("name"), if_exists=bool(m.group("if_exists"))
             )
-            return self.spark.range(0).select()
+            return local_frame(self.spark, [], NO_COLUMNS)
         m = _UNSUPPORTED_DDL.match(text)
         if m:
             raise NotImplementedError(
@@ -674,7 +674,7 @@ class Engine:
         )
         if m:  # reference PrepareTask.java — SQL form
             self.prepare(m.group(1), m.group(2).strip().rstrip(";"))
-            return self.spark.range(0).select()
+            return local_frame(self.spark, [], NO_COLUMNS)
         m = re.match(
             r"^\s*EXECUTE\s+([A-Za-z_][A-Za-z0-9_]*)"
             r"(?:\s+USING\s+(.+?))?\s*;?\s*$",
@@ -694,11 +694,11 @@ class Engine:
         )
         if m:  # reference DeallocateTask.java
             self.deallocate(m.group(1))
-            return self.spark.range(0).select()
+            return local_frame(self.spark, [], NO_COLUMNS)
         m = re.match(r"^\s*USE\s+([A-Za-z_][A-Za-z0-9_.]*)\s*;?\s*$", text, re.I)
         if m:  # reference UseTask.java — session schema switch
             self.spark.catalog.setCurrentDatabase(m.group(1).split(".")[-1])
-            return self.spark.range(0).select()
+            return local_frame(self.spark, [], NO_COLUMNS)
         from witdb_spark.plans.recursive import execute_recursive, has_recursive
 
         if has_recursive(text):
@@ -833,8 +833,8 @@ class Engine:
                     " directory"
                 )
             self._registered_tables[name.lower()] = (tfmt, tpath)
-            return self.spark.createDataFrame(
-                [(name.lower(), tfmt, tpath)],
+            return local_frame(
+                self.spark, [(name.lower(), tfmt, tpath)],
                 "name string, format string, path string",
             )
         if proc == "unregister_table":
@@ -842,8 +842,8 @@ class Engine:
             if name not in self._registered_tables:
                 raise ValueError(f"no registered table {args[0]!r}")
             tfmt, tpath = self._registered_tables.pop(name)
-            return self.spark.createDataFrame(
-                [(name, tfmt, tpath)],
+            return local_frame(
+                self.spark, [(name, tfmt, tpath)],
                 "name string, format string, path string",
             )
         path = args[0]
@@ -882,7 +882,8 @@ class Engine:
             if len(args) < 2:
                 raise ValueError("system.restore needs a version")
             res = delta_restore(self.spark, path, int(args[1]))
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(path, res["version"], res["files_added"],
                   res["files_removed"])],
                 "path string, version bigint, files_added bigint,"
@@ -915,7 +916,8 @@ class Engine:
                     "m": 60_000, "s": 1_000,
                 }[rm.group(2)]
             res = delta_vacuum(self.spark, path, retain_ms=retain_ms)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(path, res["deleted"])], "path string, deleted_files bigint"
             )
         if proc == "optimize":
@@ -928,8 +930,8 @@ class Engine:
                 )
 
                 r = iceberg_optimize(self.spark, path, target_files=target)
-                return self.spark.createDataFrame(
-                    [(path, r["snapshot_id"], r["files_rewritten"])],
+                return local_frame(
+                    self.spark, [(path, r["snapshot_id"], r["files_rewritten"])],
                     "path string, snapshot_id bigint,"
                     " files_rewritten bigint",
                 )
@@ -952,11 +954,12 @@ class Engine:
                     inst = hudi_cluster(
                         self.spark, path, target_groups=target
                     )
-                return self.spark.createDataFrame(
-                    [(path, inst)], "path string, instant string"
+                return local_frame(
+                    self.spark, [(path, inst)], "path string, instant string"
                 )
             res = delta_optimize(self.spark, path, target_files=target)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(path, res["version"], res["files_before"],
                   res["files_after"])],
                 "path string, version bigint, files_before bigint,"
@@ -972,8 +975,8 @@ class Engine:
             res = iceberg_expire_snapshots(
                 path, keep_last=keep, spark=self.spark
             )
-            return self.spark.createDataFrame(
-                [(path, res["expired_snapshots"], res["deleted_files"])],
+            return local_frame(
+                self.spark, [(path, res["expired_snapshots"], res["deleted_files"])],
                 "path string, expired_snapshots bigint,"
                 " deleted_files bigint",
             )
@@ -988,8 +991,8 @@ class Engine:
                     "system.rollback_to_snapshot needs a snapshot id"
                 )
             sid = iceberg_rollback_to_snapshot(path, int(args[1]))
-            return self.spark.createDataFrame(
-                [(path, sid)], "path string, current_snapshot_id bigint"
+            return local_frame(
+                self.spark, [(path, sid)], "path string, current_snapshot_id bigint"
             )
         if proc == "drop_extended_stats":
             # reference DropExtendedStatsProcedure — both the delta
@@ -1000,8 +1003,8 @@ class Engine:
                     iceberg_drop_statistics,
                 )
 
-                return self.spark.createDataFrame(
-                    [(path, iceberg_drop_statistics(path))],
+                return local_frame(
+                    self.spark, [(path, iceberg_drop_statistics(path))],
                     "path string, dropped boolean",
                 )
             if fmt != "delta":
@@ -1013,8 +1016,8 @@ class Engine:
             existed = os.path.exists(f)
             if existed:
                 os.remove(f)
-            return self.spark.createDataFrame(
-                [(path, existed)], "path string, dropped boolean"
+            return local_frame(
+                self.spark, [(path, existed)], "path string, dropped boolean"
             )
         if proc == "remove_orphan_files":
             # reference RemoveOrphanFilesTableProcedure.java (r13)
@@ -1043,8 +1046,8 @@ class Engine:
             res = iceberg_remove_orphan_files(
                 path, retention_ms=retain_ms, spark=self.spark
             )
-            return self.spark.createDataFrame(
-                [(path, res["scanned_files"], res["deleted_files"])],
+            return local_frame(
+                self.spark, [(path, res["scanned_files"], res["deleted_files"])],
                 "path string, scanned_files bigint,"
                 " deleted_files bigint",
             )
@@ -1066,7 +1069,8 @@ class Engine:
             )
 
             res = iceberg_cherry_pick(path, int(args[1]))
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(path, res["source_snapshot_id"],
                   res["current_snapshot_id"])],
                 "path string, source_snapshot_id bigint,"
@@ -1090,7 +1094,8 @@ class Engine:
                     " '<to>')"
                 )
             res = iceberg_fast_forward(path, args[1], args[2])
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(path, res["branch"], res["previous_head"],
                   res["current_head"])],
                 "path string, branch string, previous_head bigint,"
@@ -1102,8 +1107,8 @@ class Engine:
 
             keep = int(args[1]) if len(args) > 1 else 1
             res = hudi_clean(path, keep_last=keep)
-            return self.spark.createDataFrame(
-                [(path, res["retained_instants"], res["deleted_files"])],
+            return local_frame(
+                self.spark, [(path, res["retained_instants"], res["deleted_files"])],
                 "path string, retained_instants bigint,"
                 " deleted_files bigint",
             )
@@ -1111,8 +1116,8 @@ class Engine:
             self.spark, path,
             v2=(len(args) > 1 and str(args[1]).lower() == "v2"),
         )
-        return self.spark.createDataFrame(
-            [(path, version)], "path string, checkpointed_version bigint"
+        return local_frame(
+            self.spark, [(path, version)], "path string, checkpointed_version bigint"
         )
 
     # path-table spelling for the SQL DML front door: the reference
@@ -1426,8 +1431,8 @@ class Engine:
                         write_hudi(self.spark, df, path, mode="append")
             finally:
                 df.unpersist()
-            return self.spark.createDataFrame(
-                [(path, n)], "path string, rows bigint"
+            return local_frame(
+                self.spark, [(path, n)], "path string, rows bigint"
             )
         m = _re.match(
             r"^\s*DELETE\s+FROM\s+" + self._DML_TABLE
@@ -1439,8 +1444,8 @@ class Engine:
             # no WHERE = every row (ANSI DELETE semantics)
             pred = fragment(m.group("pred")) if m.group("pred") else "true"
             res = self._dml_dispatch(fmt, "delete", path, pred)
-            return self.spark.createDataFrame(
-                [(path, str(res))], "path string, result string"
+            return local_frame(
+                self.spark, [(path, str(res))], "path string, result string"
             )
         m = _re.match(
             r"^\s*UPDATE\s+" + self._DML_TABLE + r"\s+SET\s+",
@@ -1486,8 +1491,8 @@ class Engine:
             res = self._dml_dispatch(
                 fmt, "update", path, pred, assignments
             )
-            return self.spark.createDataFrame(
-                [(path, str(res))], "path string, result string"
+            return local_frame(
+                self.spark, [(path, str(res))], "path string, result string"
             )
         m = _re.match(
             r"^\s*MERGE\s+INTO\s+" + self._DML_TABLE
@@ -1727,8 +1732,8 @@ class Engine:
         res = self._dml_dispatch(
             fmt, "merge", path, None, None, source, on_cols, kwargs
         )
-        return self.spark.createDataFrame(
-            [(path, str(res))], "path string, result string"
+        return local_frame(
+            self.spark, [(path, str(res))], "path string, result string"
         )
 
     def _dml_dispatch(
@@ -1876,13 +1881,11 @@ class Engine:
                 continue  # engine internals (__information_schema_*, __mr_rel_*)
             kind = "VIEW" if t.tableType in ("VIEW", "TEMPORARY") else "BASE TABLE"
             tables.append((cat, t.namespace[0] if t.namespace else "default", t.name, kind))
-        self.spark.createDataFrame(
-            tables or [(cat, "default", "", "")],
+        local_frame(
+            self.spark, tables,
             "table_catalog string, table_schema string, table_name string,"
             " table_type string",
-        ).where("table_name <> ''").createOrReplaceTempView(
-            "__information_schema_tables"
-        )
+        ).createOrReplaceTempView("__information_schema_tables")
         cols = []
         for _, schema, name, _ in tables:
             try:
@@ -1894,22 +1897,18 @@ class Engine:
                     )
             except Exception:
                 continue  # dropped concurrently / unresolvable
-        self.spark.createDataFrame(
-            cols or [(cat, "default", "", "", 0, "", "")],
+        local_frame(
+            self.spark, cols,
             "table_catalog string, table_schema string, table_name string,"
             " column_name string, ordinal_position int, is_nullable string,"
             " data_type string",
-        ).where("table_name <> ''").createOrReplaceTempView(
-            "__information_schema_columns"
-        )
+        ).createOrReplaceTempView("__information_schema_columns")
         views = [(cat, "default", n, sql) for n, sql in self._views.items()]
-        self.spark.createDataFrame(
-            views or [(cat, "default", "", "")],
+        local_frame(
+            self.spark, views,
             "table_catalog string, table_schema string, table_name string,"
             " view_definition string",
-        ).where("table_name <> ''").createOrReplaceTempView(
-            "__information_schema_views"
-        )
+        ).createOrReplaceTempView("__information_schema_views")
 
     # -- views (reference CreateViewTask.java:99 stores the SQL text;
     # analysis re-expands it per query) ------------------------------------
@@ -1923,7 +1922,7 @@ class Engine:
         self._register_view(name, trino_sql)
         self._views[name] = trino_sql.strip()
         self._save_views()
-        return self.spark.range(0).select()
+        return local_frame(self.spark, [], NO_COLUMNS)
 
     def _register_view(self, name: str, trino_sql: str) -> None:
         self.spark.sql(
@@ -2135,7 +2134,8 @@ class Engine:
             from witdb_spark.sources.iceberg_meta import iceberg_analyze
 
             r = iceberg_analyze(self.spark, path)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [
                     (
                         path,
@@ -2215,8 +2215,8 @@ class Engine:
         with open(tmp, "w") as fh:
             _json.dump(out, fh)
         os.replace(tmp, target)
-        return self.spark.createDataFrame(
-            [(path, len(col_stats), float(r["__n"]))],
+        return local_frame(
+            self.spark, [(path, len(col_stats), float(r["__n"]))],
             "path string, analyzed_columns bigint, row_count double",
         )
 
@@ -2267,8 +2267,8 @@ class Engine:
                 )
             )
         rows.append((None, None, None, None, None, None, float(n)))
-        return self.spark.createDataFrame(
-            rows,
+        return local_frame(
+            self.spark, rows,
             "column_name string, data_size double, distinct_values_count"
             " double, nulls_fraction double, low_value string, high_value"
             " string, row_count double",
@@ -2376,8 +2376,8 @@ class Engine:
             f"CREATE TABLE {fmt}.\"{path}\" (\n   {cols}\n)\n"
             f"WITH (\n   {with_block}\n)"
         )
-        return self.spark.createDataFrame(
-            [(ddl,)], "`Create Table` string"
+        return local_frame(
+            self.spark, [(ddl,)], "`Create Table` string"
         )
 
     def show_columns(self, table: str) -> DataFrame:
@@ -2387,8 +2387,8 @@ class Engine:
             (f.name, f.dataType.simpleString(), "", f.metadata.get("comment", ""))
             for f in self.spark.table(table).schema.fields
         ]
-        return self.spark.createDataFrame(
-            rows, "Column string, Type string, Extra string, Comment string"
+        return local_frame(
+            self.spark, rows, "Column string, Type string, Extra string, Comment string"
         )
 
     def set_session(self, prop: str, value: str) -> None:

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType, StructField, DoubleType
 
+from witdb_spark.frames import local_frame
+
 _SINGLE_RING = r"^POLYGON \(\([^()]*\)\)$"
 
 #: unroll budget for the literal-predicate verify tier: beyond this the
@@ -207,21 +209,17 @@ def spatial_join_contains(
                     math.floor(min(ys) / cs), math.floor(max(ys) / cs) + 1
                 ):
                     cell_rows.append((w, cx, cy))
-        # the cell map is a VALUES LocalRelation, NOT createDataFrame:
-        # parallelizing a python list schedules defaultParallelism
-        # python-worker tasks (32 tasks for 60 rows — measured ~50s of
-        # blocked executorRunTime at sf0.1 for ~1s of real CPU), while
-        # VALUES folds driver-side with zero tasks. The inner join onto
-        # the polygon side broadcasts explicitly — it sits inside the
-        # outer broadcast exchange, out of AQE's reach, and would plan
-        # as a 64-partition SortMergeJoin otherwise.
-        esc = lambda s: s.replace("'", "''")  # noqa: E731
-        values = ", ".join(
-            f"('{esc(w)}', {cx}, {cy})" for w, cx, cy in cell_rows
-        )
-        cells_map = polys.sparkSession.sql(
-            f"SELECT col1 AS _w, CAST(col2 AS LONG) AS _cx,"
-            f" CAST(col3 AS LONG) AS _cy FROM VALUES {values}"
+        # the cell map is a driver-local relation (frames.local_frame),
+        # NOT a parallelized python list: that schedules
+        # defaultParallelism python-worker tasks (32 tasks for 60 rows —
+        # measured ~50s of blocked executorRunTime at sf0.1 for ~1s of
+        # real CPU), while a LocalRelation folds driver-side with zero
+        # tasks. The inner join onto the polygon side broadcasts
+        # explicitly — it sits inside the outer broadcast exchange, out
+        # of AQE's reach, and would plan as a 64-partition
+        # SortMergeJoin otherwise.
+        cells_map = local_frame(
+            polys.sparkSession, cell_rows, "_w string, _cx bigint, _cy bigint"
         )
         cells = F.broadcast(
             polys.coalesce(1).join(
@@ -229,6 +227,7 @@ def spatial_join_contains(
             ).drop("_w")
         )
         cand = pts.join(cells, ["_cx", "_cy"]).drop("_cx", "_cy")
+        esc = lambda s: s.replace("'", "''")  # noqa: E731
         branches = " ".join(
             f"WHEN '{esc(w)}' THEN {_unrolled_contains_pred(w, px, py)}"
             for w in sample

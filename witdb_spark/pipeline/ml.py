@@ -17,6 +17,8 @@ from pyspark.ml.functions import array_to_vector, vector_to_array
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from witdb_spark.frames import local_frame
+
 
 def learn_classifier(
     train: DataFrame,
@@ -154,4 +156,4 @@ def evaluate_classifier_predictions(
         )
     report = "\n".join(lines) + "\n"
     spark = df.sparkSession
-    return spark.createDataFrame([(report,)], ["report"])
+    return local_frame(spark, [(report,)], "report string")

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from witdb_spark.frames import local_frame
+
 # Dot product of two float arrays as a sequential left-to-right double fold.
 # Spark's aggregate() and DuckDB's list_reduce() both fold the array in
 # element order, so the identical sequence of IEEE double operations runs on
@@ -120,8 +122,8 @@ def embedding_near_duplicates(
     # same-bucket join quadratic — silently
     first = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
     if first is None:
-        return corpus.sparkSession.createDataFrame(
-            [], "a_id long, b_id long, cosine double"
+        return local_frame(
+            corpus.sparkSession, [], "a_id long, b_id long, cosine double"
         )
     buckets = lsh_buckets(
         corpus, num_planes=num_planes, vec_col=vec_col, id_col=id_col,

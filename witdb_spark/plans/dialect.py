@@ -2845,17 +2845,37 @@ def _month_bound(y: int, mo: int) -> str:
     return f"TIMESTAMP_NTZ '{y}-{mo:02d}-01 00:00:00'"
 
 
+#: What may stand right before / after a ``year(c) = Y AND month(c) = M``
+#: match for it to be one conjunction. AND binds looser than NOT, than
+#: comparison and than IS/IN/LIKE/BETWEEN, so a neighbouring ``NOT`` or
+#: operator binds to one half only: ``NOT year(c) = Y AND month(c) = M``
+#: is ``(NOT year(c) = Y) AND month(c) = M``, and replacing the pair
+#: would negate the whole range instead.
+_CONJ_BEFORE = re.compile(
+    r"(?:^|[(,]|\b(?:WHERE|AND|OR|ON|WHEN|THEN|ELSE|HAVING|SELECT"
+    r"|QUALIFY))\s*$",
+    re.I,
+)
+_CONJ_AFTER = re.compile(
+    r"\s*(?:$|[),;]|(?:AND|OR|THEN|WHEN|ELSE|END|AS|FROM|GROUP|ORDER"
+    r"|HAVING|LIMIT|UNION|EXCEPT|INTERSECT|WINDOW|QUALIFY)\b)",
+    re.I,
+)
+
+
 def _rewrite_year_month_ranges(sql: str) -> str:
     """``year(col) = Y AND month(col) = M`` -> one NTZ month range.
 
     Runs BEFORE _rewrite_year_ranges (which would otherwise consume the
     year() half alone and leave the month() half unsargable). Same total
     per-expression equivalence as the year rewrite — NULL input yields
-    NULL under both spellings, the conjunction is replaced as a unit so
-    it composes under OR/NOT/CASE — and the month range prunes 12x
-    tighter than the year range at the scan. Fires only on the fixed
-    NTZ catalog columns, both sides naming the SAME column, never
-    inside strings, and skips re-aliased names (guide §6)."""
+    NULL under both spellings — and the month range prunes 12x tighter
+    than the year range at the scan. The pair is replaced as a unit, so
+    it fires only where the text parses as that one conjunction: never
+    after ``NOT`` or next to an operator that binds tighter than AND
+    (_CONJ_BEFORE / _CONJ_AFTER). Fires only on the fixed NTZ catalog
+    columns, both sides naming the SAME column, never inside strings,
+    and skips re-aliased names (guide §6)."""
     skip = {
         name
         for name in _YEAR_RANGE_COLS
@@ -2870,6 +2890,8 @@ def _rewrite_year_month_ranges(sql: str) -> str:
                 and cand.group("base").lower() not in skip
                 and cand.group("col").lower() == cand.group("col2").lower()
                 and 1 <= int(cand.group("m")) <= 12
+                and _CONJ_BEFORE.search(sql, 0, cand.start())
+                and _CONJ_AFTER.match(sql, cand.end())
             ):
                 m = cand
                 break
@@ -3255,7 +3277,10 @@ def _decimal_typed_cols(sql: str) -> frozenset[str]:
     dec = frozenset(
         {n for n, _ in defs if n not in physical}
     )
-    for _ in range(6):
+    # _is_decimal_cast is monotone in the assumption set, so every pass
+    # either converges or drops at least one name: len(defs) + 1 passes
+    # always reach the fixpoint, however deep the CTE chain
+    for _ in range(len(defs) + 1):
         status: dict[str, bool] = {}
         for name, expr in defs:
             ok = _is_decimal_cast(expr, dec)
@@ -3264,9 +3289,10 @@ def _decimal_typed_cols(sql: str) -> frozenset[str]:
             n for n, ok in status.items() if ok and n not in physical
         )
         if new == dec:
-            break
+            return dec
         dec = new
-    return dec
+    # unreachable for a monotone check; an unconverged set is unproven
+    return frozenset()
 
 
 def _cte_bodies(sql: str) -> dict[str, str]:

@@ -777,6 +777,18 @@ def _narrow_cte_and_consumer(sql: str, P: dict) -> str | None:
     if cte_pat.search(head[: hm.start(1)]):
         return None  # referenced before its definition — not our shape
     td, ti = d._scan_maps(tail)
+    # a select-list `*` or `alias.*` would expand to the NARROWED column
+    # set: the dropped attributes vanish and the hidden __ea_a{i} anchors
+    # appear. A star item follows SELECT/DISTINCT/ALL, a comma or a
+    # qualifier dot; count(*) follows `(` and a product its left operand.
+    for mm in re.finditer(r"\*", tail):
+        if ti[mm.start()]:
+            continue
+        before = tail[: mm.start()].rstrip()
+        if before.endswith((".", ",")) or re.search(
+            r"\b(SELECT|DISTINCT|ALL)$", before, re.I
+        ):
+            return None
     instances: list[tuple[int, str]] = []
     for mm in cte_pat.finditer(tail):
         if ti[mm.start()]:

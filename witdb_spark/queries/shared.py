@@ -53,37 +53,3 @@ def ts(date_str: str) -> Column:
     """A timestamp_ntz literal for comparisons against parquet timestamps."""
     return F.lit(date_str).cast("timestamp_ntz")
 
-
-def local_df(spark, rows, schema_ddl: str):
-    """Small local data -> a pure-JVM VALUES LocalRelation.
-
-    ``spark.createDataFrame(list)`` parallelizes the list across
-    defaultParallelism PYTHON-worker partitions — 32 blocked tasks for
-    a 6-row dimension table in local[32] (measured ~0.3-1.5s of
-    executorRunTime EACH under load), and every downstream
-    distinct/collect pays it again. A VALUES relation folds
-    driver-side: zero tasks, zero python workers, and Catalyst sees
-    exact row counts for broadcast decisions. Supported cell types:
-    str, bool, int, float, None (typed by the DDL cast).
-    """
-    names_types = [c.strip().rsplit(" ", 1) for c in schema_ddl.split(",")]
-
-    def lit(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, bool):
-            return "true" if v else "false"
-        if isinstance(v, str):
-            return "'" + v.replace("'", "''") + "'"
-        if isinstance(v, (int, float)):
-            return repr(v)
-        raise TypeError(f"local_df cell {v!r}: pass str/bool/int/float/None")
-
-    values = ", ".join(
-        "(" + ", ".join(lit(v) for v in row) + ")" for row in rows
-    )
-    select = ", ".join(
-        f"CAST(col{i + 1} AS {t}) AS {n}"
-        for i, (n, t) in enumerate(names_types)
-    )
-    return spark.sql(f"SELECT {select} FROM VALUES {values}")

@@ -16,8 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from witdb_spark.catalog import Tables
+from witdb_spark.frames import local_frame
 from witdb_spark.queries.registry import register
-from witdb_spark.queries.shared import local_df
 
 # CCW triangles, 0.25-grid vertices, lattice-safe within [0,97)x[0,89)
 TRIANGLES: list[list[tuple[float, float]]] = [
@@ -85,10 +85,10 @@ def spatial_join_contains_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = t.events.select(
         "event_id", F.expr(_PX).alias("x"), F.expr(_PY_SPARK).alias("y")
     )
-    # VALUES LocalRelation, not createDataFrame: a python-parallelized
-    # 6-row dim costs 32 python-worker tasks per downstream action in
-    # local[32] (see queries/shared.local_df)
-    polys = local_df(
+    # a driver-local relation, not a parallelized python list: the
+    # list form costs one task per core on every downstream action
+    # (see witdb_spark/frames.py)
+    polys = local_frame(
         spark,
         [(i, tri_wkt(tri)) for i, tri in enumerate(TRIANGLES)],
         "poly_id int, wkt string",

@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from witdb_spark.frames import local_frame
 from witdb_spark.sources.paths import norm_path_expr
 
 #: minReaderVersion 3 reader features this module actually honors.
@@ -981,7 +982,7 @@ def read_delta_snapshot(
         )
 
     if not entries:
-        empty = spark.createDataFrame([], schema)
+        empty = local_frame(spark, [], schema)
         if _row_tags:
             empty = empty.withColumns(
                 {
@@ -1826,7 +1827,7 @@ def delta_table_changes(
                 dv_state.pop(r["path"], None)
                 pv_state.pop(r["path"], None)
     if not changes:
-        empty = spark.createDataFrame([], schema)
+        empty = local_frame(spark, [], schema)
         return empty.select(
             "*",
             F.lit(None).cast("string").alias("_change_type"),

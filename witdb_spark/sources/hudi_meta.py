@@ -27,6 +27,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from witdb_spark.frames import local_frame
+
 
 class HudiProtocolError(RuntimeError):
     pass
@@ -720,8 +722,8 @@ def read_hudi_snapshot(
             .get("schema")
         )
         if schema_json:
-            return spark.createDataFrame(
-                [], StructType.fromJson(json.loads(schema_json))
+            return local_frame(
+                spark, [], StructType.fromJson(json.loads(schema_json))
             )
     raise HudiProtocolError(
         f"{path}: zero active file groups and no schema in the commit"
@@ -2734,7 +2736,7 @@ def hudi_cdc_changes(spark: SparkSession, path: str) -> DataFrame:
         " after string, _commit_time string"
     )
     if not logs:
-        return spark.createDataFrame([], out_ddl)
+        return local_frame(spark, [], out_ddl)
     completed = {i for i, _, _ in _completed_instants(path)}
     logs_df = spark.createDataFrame(
         [(p,) for p in logs], "__log string"

@@ -32,6 +32,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from witdb_spark.frames import local_frame
 from witdb_spark.sources.avro_codec import read_avro_file, write_avro_file
 
 
@@ -684,7 +685,7 @@ def read_iceberg_snapshot(
             f"`{f['name']}` {_ice_type_ddl(f['type'])}"
             for f in _table_schema(meta)["fields"]
         )
-        return spark.createDataFrame([], ddl)
+        return local_frame(spark, [], ddl)
     df = spark.read.parquet(*sorted(set(files)))
     missing = [c for c in cols if c not in df.columns]
     if missing:
@@ -2813,7 +2814,7 @@ def iceberg_incremental_scan(
             f"`{f['name']}` {_ice_type_ddl(f['type'])}"
             for f in _table_schema(meta)["fields"]
         )
-        return spark.createDataFrame([], ddl).withColumn(
+        return local_frame(spark, [], ddl).withColumn(
             "_snapshot_id", F.lit(None).cast("bigint")
         )
     out = pieces[0]

@@ -19,6 +19,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
+from witdb_spark.frames import local_frame
+
 
 class MetadataTableError(ValueError):
     pass
@@ -78,7 +80,8 @@ def _delta_history(spark: SparkSession, path: str) -> DataFrame:
                 json.dumps(info.get("operationParameters") or {}),
             )
         )
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         rows,
         "version bigint, timestamp_ms bigint, operation string,"
         " operation_parameters string",
@@ -100,10 +103,9 @@ def _delta_properties(spark: SparkSession, path: str) -> DataFrame:
         spark, path, None, None, allow_dvs=True, allow_name_mapping=True
     )
     conf = metadata.get("configuration") or {}
-    return spark.createDataFrame(
-        sorted(conf.items()) or [("", "")],
-        "key string, value string",
-    ).filter("key <> '' OR value <> ''")
+    return local_frame(
+        spark, sorted(conf.items()), "key string, value string"
+    )
 
 
 def _delta_partitions(spark: SparkSession, path: str) -> DataFrame:
@@ -170,10 +172,11 @@ def _delta_partitions(spark: SparkSession, path: str) -> DataFrame:
         )
         for r in agg_rows
     )
-    return spark.createDataFrame(
-        rows or [("{}", 0, 0)],
+    return local_frame(
+        spark,
+        rows,
         "partition string, file_count bigint, record_count bigint",
-    ).filter("file_count > 0")
+    )
 
 
 # ---------------------------------------------------------------- iceberg
@@ -195,11 +198,12 @@ def _ice_snapshots(spark: SparkSession, path: str) -> DataFrame:
         )
         for s in meta.get("snapshots") or []
     ]
-    df = spark.createDataFrame(
-        rows or [(0, None, 0, "", "")],
+    df = local_frame(
+        spark,
+        rows,
         "snapshot_id bigint, parent_id bigint, committed_ms bigint,"
         " operation string, manifest_list string",
-    ).filter("manifest_list <> '' OR snapshot_id <> 0")
+    )
     return df.select(
         F.timestamp_millis(F.col("committed_ms")).alias("committed_at"),
         "snapshot_id", "parent_id", "operation", "manifest_list",
@@ -249,11 +253,12 @@ def _ice_history(spark: SparkSession, path: str) -> DataFrame:
         )
         for e in log
     ]
-    df = spark.createDataFrame(
-        rows or [(0, 0, None, False)],
+    df = local_frame(
+        spark,
+        rows,
         "made_current_ms bigint, snapshot_id bigint, parent_id bigint,"
         " is_current_ancestor boolean",
-    ).filter("snapshot_id <> 0 OR made_current_ms <> 0")
+    )
     return df.select(
         F.timestamp_millis(F.col("made_current_ms")).alias(
             "made_current_at"
@@ -266,10 +271,9 @@ def _ice_properties(spark: SparkSession, path: str) -> DataFrame:
     from witdb_spark.sources.iceberg_meta import _current_metadata
 
     props = _current_metadata(path).get("properties") or {}
-    return spark.createDataFrame(
-        sorted(props.items()) or [("", "")],
-        "key string, value string",
-    ).filter("key <> '' OR value <> ''")
+    return local_frame(
+        spark, sorted(props.items()), "key string, value string"
+    )
 
 
 def _ice_manifests(spark: SparkSession, path: str) -> DataFrame:
@@ -294,11 +298,12 @@ def _ice_manifests(spark: SparkSession, path: str) -> DataFrame:
         )
         for m in manifests
     ]
-    return spark.createDataFrame(
-        rows or [("", 0, 0, 0, None, None)],
+    return local_frame(
+        spark,
+        rows,
         "path string, length bigint, partition_spec_id int,"
         " content int, added_snapshot_id bigint, sequence_number bigint",
-    ).filter("path <> ''")
+    )
 
 
 def _ice_files(spark: SparkSession, path: str) -> DataFrame:
@@ -331,12 +336,13 @@ def _ice_files(spark: SparkSession, path: str) -> DataFrame:
                     else None,
                 )
             )
-    return spark.createDataFrame(
-        rows or [(0, "", "", 0, 0, None)],
+    return local_frame(
+        spark,
+        rows,
         "content int, file_path string, file_format string,"
         " record_count bigint, file_size_in_bytes bigint,"
         " partition string",
-    ).filter("file_path <> ''")
+    )
 
 
 def _ice_partitions(spark: SparkSession, path: str) -> DataFrame:
@@ -369,11 +375,12 @@ def _ice_partitions(spark: SparkSession, path: str) -> DataFrame:
     rows = [
         (k, n, rec, sz) for k, (n, rec, sz) in sorted(agg.items())
     ]
-    return spark.createDataFrame(
-        rows or [("{}", 0, 0, 0)],
+    return local_frame(
+        spark,
+        rows,
         "partition string, file_count bigint, record_count bigint,"
         " total_size bigint",
-    ).filter("file_count > 0")
+    )
 
 
 def _ice_refs(spark: SparkSession, path: str) -> DataFrame:
@@ -397,11 +404,12 @@ def _ice_refs(spark: SparkSession, path: str) -> DataFrame:
         )
         for name, r in sorted(refs.items())
     ]
-    return spark.createDataFrame(
-        rows or [("", "", None, None)],
+    return local_frame(
+        spark,
+        rows,
         "name string, type string, snapshot_id bigint,"
         " max_reference_age_ms bigint",
-    ).filter("name <> ''")
+    )
 
 
 # ------------------------------------------------------------------- hudi
@@ -414,10 +422,9 @@ def _hudi_timeline(spark: SparkSession, path: str) -> DataFrame:
         (instant, action, "COMPLETED")
         for instant, action, _f in _completed_instants(path)
     ]
-    return spark.createDataFrame(
-        rows or [("", "", "")],
-        "timestamp string, action string, state string",
-    ).filter("timestamp <> ''")
+    return local_frame(
+        spark, rows, "timestamp string, action string, state string"
+    )
 
 
 _TABLES = {
